@@ -135,10 +135,11 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
 def connected_components(edges: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     """edges(url_a, url_b) → labels(url, component) where component is the
     minimum url reachable. Runs alternating large-star/small-star until the
-    edge set is stable or cfg.max_iterations is hit (iteration cap mirrors the
-    reference's recursion cap). Edge sets below cfg.cc_driver_threshold take
-    the exact driver union-find fast path (AQE-spirit adaptivity: pick the
-    physical strategy by observed size)."""
+    edge set is stable, and raises RuntimeError if cfg.max_iterations rounds
+    pass without that (iteration cap mirrors the reference's recursion cap).
+    Edge sets below cfg.cc_driver_threshold take the exact driver union-find
+    fast path (AQE-spirit adaptivity: pick the physical strategy by observed
+    size)."""
     cfg = cfg or PipelineConfig()
     spark = edges.sparkSession
 
@@ -162,6 +163,12 @@ def connected_components(edges: DataFrame, cfg: PipelineConfig | None = None) ->
         if sig == prev_sig:
             break
         prev_sig = sig
+    else:
+        # labels of an edge set still changing are not components
+        raise RuntimeError(
+            f"connected components did not converge within max_iterations="
+            f"{cfg.max_iterations} rounds; raise max_iterations"
+        )
 
     # After convergence every edge is (node, root); nodes that ARE roots appear
     # only on the right side — add their self-labels.

@@ -412,6 +412,8 @@ def minhash_lsh_near_dup(spark, sf_dir):
             "rep", "doc_id"
         )
         p, q = dup_m.alias("p"), dup_m.alias("q")
+        if stats["n_docs"] <= 250_000:
+            q = F.broadcast(q)  # keeps the clique self-join off a sort-merge
         intra = p.join(
             q,
             (F.col("p.rep") == F.col("q.rep"))
@@ -2290,7 +2292,8 @@ def semantic_dedup_embeddings(
             f"restore bounded occupancy"
         )
     e = _spread(
-        raw.select(
+        # a NULL vector has no cosine to anything: it never pairs
+        raw.where(F.col("embedding").isNotNull()).select(
             "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
         )
     )
@@ -2414,7 +2417,10 @@ def semantic_dedup_embeddings(
         # it from the identical double arrays/norms any member carries;
         # intra-group pairs emit sim = 1.0, which is exactly what the verify
         # yields for identical vectors (|num/denom - 1| <= a few ulps, so
-        # the HALF_UP 4-digit rounding is 1.0 bit-for-bit).
+        # the HALF_UP 4-digit rounding is 1.0 bit-for-bit) — but only when
+        # the norm is positive and finite: a zero-norm (or non-finite)
+        # vector verifies to 0/0 = NaN, which reaches Spark as NULL and
+        # fails the tau filter, so its clique emits nothing in either mode.
         ma = memb.select(F.col("rep").alias("vec_id_a"), F.col("vec_id").alias("xa"))
         mb = memb.select(F.col("rep").alias("vec_id_b"), F.col("vec_id").alias("xb"))
         if n <= 250_000:
@@ -2428,7 +2434,16 @@ def semantic_dedup_embeddings(
                 "sim",
             )
         )
-        dup = memb.filter(F.col("cnt") > 1).select("rep", "vec_id")
+        unit = b.filter((F.col("nrm") > 0) & (F.col("nrm") < float("inf"))).select(
+            F.col("vec_id").alias("rep")
+        )
+        if n <= 250_000:
+            unit = F.broadcast(unit)
+        dup = (
+            memb.filter(F.col("cnt") > 1)
+            .join(unit, "rep", "left_semi")
+            .select("rep", "vec_id")
+        )
         p, q = dup.alias("p"), dup.alias("q")
         if n <= 250_000:
             q = F.broadcast(q)  # keeps the clique self-join off a sort-merge

@@ -35,6 +35,15 @@ _OVERHEAD_FACTOR = 0.10
 _SPARK_MIN_HEAP = 450 * _MIB
 # A v1 cgroup with no limit reports PAGE_COUNTER_MAX pages (~2^63 bytes).
 _CGROUP_NO_LIMIT = 1 << 62
+# Generated-code class cache (spark.sql.codegen.cache.maxEntries), an LRU
+# keyed by generated source. Spark's default of 100 is below one
+# run_pipeline op, so the cache cycles and every warm op compiles (and the
+# JIT re-warms) 90-113 classes again. Basis, from CodegenMetrics' compile
+# count on the perfbench mirrors workload (local[2]): one op compiles 122
+# classes cold; a traced perfbench run (re-crawl commit, pipeline and the
+# seven queries) compiles 501 distinct classes. 1000 holds that working set
+# about twice over, so a warm op compiles none.
+_CODEGEN_CACHE_ENTRIES = 1000
 
 
 def _cgroup_memory_limit(
@@ -192,6 +201,8 @@ def get_spark(
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "1073741824")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "1073741824")
         .config("spark.executorEnv.ARROW_DEFAULT_MEMORY_POOL", "system")
+        # static: read once when the codegen cache is built (see above)
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -99,6 +99,17 @@ def test_connected_components_path_graph(spark):
     assert len(labels) == n + 1
 
 
+def test_connected_components_raises_at_iteration_cap(spark):
+    """The distributed loop must not hand back labels of an edge set that is
+    still changing: one round cannot settle a 40-node path."""
+    edges = spark.createDataFrame(
+        [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(40)], ["url_a", "url_b"]
+    )
+    cfg = PipelineConfig(max_iterations=1, cc_driver_threshold=0)
+    with pytest.raises(RuntimeError, match="max_iterations=1"):
+        connected_components(edges, cfg)
+
+
 def test_cc_driver_and_distributed_paths_agree(spark):
     """The adaptive fast path (driver union-find) must be indistinguishable
     from the distributed loop."""

@@ -251,3 +251,49 @@ def test_minhash_rep_collapse_matches_brute_force(spark, tmp_path):
     empty_ids = {r[0] for r in rows if r[3] in ("", None)}
     assert all(a not in empty_ids and b not in empty_ids for a, b, _ in got)
     assert got == truth
+
+
+# ---------------------------------------------------------------------------
+# semantic exact-duplicate-vector collapse: rep mode == full mode, including
+# zero-norm and NULL vectors
+# ---------------------------------------------------------------------------
+
+def test_semantic_rep_collapse_matches_full_mode(spark, tmp_path):
+    """Three interleaved replicas of each base vector force the rep tier ON
+    (gate: distinct vectors * 2 <= rows, here 14 <= 20); n_hint forces the
+    same corpus through full mode. The bases hold a near-duplicate pair (the cross
+    expansion carries the rep pair's sim to every member pair) and an
+    all-zero vector, whose cosine is 0/0: full mode emits no pair for it, so
+    rep mode must not emit its clique at sim 1.0. Two NULL vectors pair with
+    nothing in either mode."""
+    rng = np.random.default_rng(11)
+    dim = 8
+    base = [rng.normal(size=dim) for _ in range(4)]
+    base.append(base[0] + rng.normal(scale=0.05, size=dim))
+    base.append(np.zeros(dim))
+    vecs = [[float(x) for x in v] for _rep in range(3) for v in base]
+    vecs[4:4] = [None]
+    vecs.append(None)
+    n_distinct = len(base) + 1
+    assert 2 * n_distinct <= len(vecs)  # the rep gate engages
+    df = spark.createDataFrame(
+        [(i, v, 0) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>, label int",
+    )
+    df.write.parquet(str(tmp_path / "embeddings.parquet"))
+
+    def pairs(**kw):
+        rows = Q.semantic_dedup_embeddings(spark, str(tmp_path), **kw).collect()
+        out = [(r.vec_id_a, r.vec_id_b, r.sim) for r in rows]
+        assert len(out) == len(set(out))
+        return set(out)
+
+    rep = pairs()
+    full = pairs(n_hint=len(vecs))
+    assert any(s == 1.0 for _, _, s in full)      # intra cliques present
+    assert any(s < 1.0 for _, _, s in full)       # cross pairs present
+    degenerate = {
+        i for i, v in enumerate(vecs) if v is None or not any(v)
+    }
+    assert all(a not in degenerate and b not in degenerate for a, b, _ in rep)
+    assert rep == full
