@@ -47,6 +47,11 @@ CHANNELS = ("exact", "quick", "url", "minhash")
 _CODE = {name: i + 1 for i, name in enumerate(CHANNELS)}
 
 
+# bytes of one (tinyint, long) UnsafeRow — a null word and two 8-byte
+# slots — the unit Spark sizes plans in for autoBroadcastJoinThreshold
+_KEPT_ROW_BYTES = 24
+
+
 def _decode(code_col: F.Column) -> F.Column:
     # built lazily — F.lit/F.array need an active SparkContext
     return F.element_at(
@@ -93,10 +98,12 @@ def block_keys(
     """One row per (url, channel, key) with key a 64-BIT LONG. Null keys drop.
 
     ``coded=True`` emits ``channel`` as a 1-byte code (see CHANNELS) instead
-    of a string — the internal form blocking_products aggregates on; the
-    public/default form keeps names for tests, scripts, and reports.
+    of a string, plus each row's ``full_hash`` — the internal form
+    blocking_products aggregates on (pair generation skips members with
+    identical content); the public/default form keeps names for tests,
+    scripts, and reports.
 
-    ONE scan of the (columnar-cached, column-pruned) signature frame and one
+    ONE scan of the (pinned, column-pruned) signature frame and one
     explode — the per-channel union formulation scanned the stage output four
     times, which dominated the blocking stage's wall-clock at 400k pages.
 
@@ -144,9 +151,10 @@ def block_keys(
             F.lit([]).cast(ck_type),
         ),
     )
+    carry = ["url", "full_hash"] if coded else ["url"]
     return (
-        base.select("url", F.explode(arr).alias("_ck"))
-        .select("url", F.col("_ck.channel").alias("channel"), F.col("_ck.key").alias("key"))
+        base.select(*carry, F.explode(arr).alias("_ck"))
+        .select(*carry, F.col("_ck.channel").alias("channel"), F.col("_ck.key").alias("key"))
         .filter(F.col("key").isNotNull())
     )
 
@@ -215,7 +223,14 @@ def blocking_products(
 
     The exact channel is intentionally absent here: exact duplicates go
     through the group-wise path (no pairs), keeping the quadratic work
-    bounded by cfg.max_block_size within probabilistic blocks only.
+    bounded by cfg.max_block_size within probabilistic blocks only. For the
+    same reason no pair of two pages with the same ``full_hash`` is emitted
+    from ANY channel: the exact channel's star edges already link them (on
+    mirror-heavy crawls about a third of all probabilistic pairs were such
+    copies), so candidates — and the near edges verified from them — are
+    disjoint from the star edges. Each bucket member carries its
+    ``full_hash`` for this test; the string is compared, not a fold of it,
+    so no near pair is lost to a hash collision.
     """
     cell = max(2, -(-cfg.max_block_size // max(1, cfg.salt_buckets)))  # ceil div
     codes = [_CODE[c] for c in channels]
@@ -332,19 +347,39 @@ def blocking_products(
         )
         .select("channel", "key")
     )
+    # Broadcast kept when its bound fits the session's broadcast threshold:
+    # every kept key has >= 2 of the n_keys_est key rows, so kept holds at
+    # most half that many rows. Left to AQE, the choice raced: the count
+    # agg's and the probe side's leaf shuffles run concurrently, and
+    # whichever finished first was broadcast — one input, two plans, each
+    # compiling its own classes. Above the bound AQE decides at run time.
+    if n_docs:
+        limit = (
+            pages_sig.sparkSession._jsparkSession.sessionState()
+            .conf()
+            .autoBroadcastJoinThreshold()
+        )
+        if n_keys_est // 2 * _KEPT_ROW_BYTES <= limit:
+            kept = F.broadcast(kept)
     buckets = (
         keys.join(kept, ["channel", "key"])
         .groupBy("channel", "key")
-        .agg(F.collect_list("url").alias("members"))
+        .agg(F.collect_list(F.struct("url", "full_hash")).alias("members"))
         .withColumn("n", F.size("members"))
     )
+    # full_hash hashes `text`, and a row without text is not eligible, so
+    # the hash is never NULL here and inequality means different content
+    new_content = F.col("a.full_hash") != F.col("b.full_hash")
 
     # small blocks: direct double-explode inside the bucket's own task
     small_pairs = (
         buckets.filter(F.col("n") <= cell)
-        .select("channel", F.explode("members").alias("url_a"), "members")
-        .select("channel", "url_a", F.explode("members").alias("url_b"))
-        .filter(F.col("url_a") < F.col("url_b"))
+        .select("channel", F.explode("members").alias("a"), "members")
+        .select("channel", "a", F.explode("members").alias("b"))
+        .filter((F.col("a.url") < F.col("b.url")) & new_content)
+        .select(
+            "channel", F.col("a.url").alias("url_a"), F.col("b.url").alias("url_b")
+        )
     )
 
     # salted blocks: slice the member list into cells, fan the (i, j) grid
@@ -376,12 +411,12 @@ def blocking_products(
         .select("channel", "gi", "gj", "a", F.explode("mb").alias("b"))
         # diagonal cells see both orders — keep a<b; off-diagonal cells see
         # each unordered pair once (disjoint slices) — canonicalize the order
-        .filter((F.col("gi") != F.col("gj")) | (F.col("a") < F.col("b")))
-        .filter(F.col("a") != F.col("b"))
+        .filter((F.col("gi") != F.col("gj")) | (F.col("a.url") < F.col("b.url")))
+        .filter((F.col("a.url") != F.col("b.url")) & new_content)
         .select(
             "channel",
-            F.least("a", "b").alias("url_a"),
-            F.greatest("a", "b").alias("url_b"),
+            F.least("a.url", "b.url").alias("url_a"),
+            F.greatest("a.url", "b.url").alias("url_b"),
         )
     )
 

@@ -13,8 +13,8 @@ titles (north rule "Jaro-Winkler similarity on titles/urls") — row-at-a-time
 Python inside an Arrow batch, so they run ONLY on verified edges.
 
 Every per-doc feature (shingle_set, simhash, norm_url, title) is precomputed
-once in the extract stage and read here from the columnar stage cache — this
-stage never touches text/html (column pruning, SURVEY.md §4).
+once in the extract stage and read here from the pinned stage output — this
+stage never touches text/html (SURVEY.md §4).
 """
 
 from __future__ import annotations

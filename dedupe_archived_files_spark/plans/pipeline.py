@@ -82,53 +82,52 @@ def run_pipeline(pages: DataFrame, cfg: PipelineConfig | None = None) -> Pipelin
     pages = _spread(pages, bytes_per_task=256 << 10)
     # Stages 1+2 fused: extraction + shingling + MinHash + SimHash + title in
     # ONE Python crossing (operators.extract.extract_with_signature).
-    # Stage-boundary materialization: every stage output below is consumed by
-    # more than one downstream subtree (sig → block keys AND pair features
-    # AND exact groups; candidates → pair join AND the url semi-join prune).
-    # persist(), NOT localCheckpoint: the columnar in-memory cache
-    # (InMemoryRelation) supports COLUMN PRUNING at scan time, so blocking
-    # reads only (url, hashes, band_keys) and never deserializes text /
-    # shingle arrays — a localCheckpoint pins row-format RDDs that every
-    # consumer must fully deserialize (measured 2x blocking-stage cost at
-    # 400k pages). On a real deployment these pins are the per-stage parquet
-    # writes of run_pipeline_checkpointed (same pruning property).
     full = extract_with_signature(pages, cfg)
-    # The pipeline's working frame is SLIM: `text` (the fattest column) and
-    # `signature` (1 KB/row; band_keys already encode the LSH view of it) are
-    # dropped before the cache — matching never reads either, and the
-    # columnar cache build was dominated by them at 1.2M pages. The
-    # full-width frame stays available lazily as pages_text (re-runs the
-    # extract UDF if scanned — on a real deployment it is the stage-1 parquet
-    # table, where the pipeline reads only the slim columns anyway).
-    sig = full.drop("text", "signature").persist()
-    # Eager stage barrier: downstream subtrees (block keys / exact groups /
-    # feature join) are INDEPENDENT query stages that AQE submits
-    # concurrently; against an unmaterialized cache each would recompute the
-    # UDF partitions it needs (observed as duplicated Python work + "Block
-    # already exists" races). One cheap count() builds the cache exactly once.
+    # Stage barriers are eager localCheckpoint pins (sig, cand, edges). Each
+    # output is consumed by more than one downstream subtree (sig → block
+    # keys AND pair features AND exact groups; cand → pair join AND the url
+    # semi-join prune); the pin materializes it once, where lazy or
+    # concurrent AQE query stages would each recompute the UDF / blocking
+    # partitions they need. A pin also cuts the plan: the next layer plans
+    # from a LogicalRDD leaf, not from the whole upstream tree. Under
+    # persist() every frame re-embedded the cached extract/featurize plan
+    # (the optimized plan of `scored` was 177 KB, now 2.6 KB), and planning
+    # those trees — plus the JIT work on Catalyst it drives — held up each
+    # layer on the driver. The pin's own job also stands in for the count()
+    # of cand and edges: 30 → 19 jobs per `mirrors` op, and cpu_s_per_op
+    # 19.2 → 12.7 s (perfbench, 4-core VM, local[2]). Row-format pins lose
+    # the columnar cache's scan-time column pruning (a wide-frame
+    # localCheckpoint once cost 2x in blocking at 400k pages); on the slim
+    # frame below, warm run_pipeline at 50k and 400k pages is no slower
+    # (SCALING.md §4). Pins are not cached tables: spark.catalog.clearCache()
+    # does not free them; Spark's ContextCleaner releases their blocks after
+    # the PipelineResult holding them is dropped.
+    # The working frame is SLIM: `text` (the fattest column) and `signature`
+    # (1 KB/row; band_keys already encode the LSH view of it) are dropped
+    # before the pin — matching never reads either. The full-width frame
+    # stays available lazily as pages_text (re-runs the extract UDF if
+    # scanned — on a real deployment it is the stage-1 parquet table).
+    sig = full.drop("text", "signature").localCheckpoint(eager=True)
+    # n_docs sizes the blocking agg's repartition by data volume and bounds
+    # its kept-key broadcast (see operators.blocking +
+    # config.agg_keys_per_partition)
     n_docs = sig.count()
     pages_text = full
 
-    # n_docs sizes the blocking agg's repartition by data volume (see
-    # operators.blocking + config.agg_keys_per_partition)
     cand, big = blocking_products(sig, cfg, n_docs=n_docs)
-    cand = cand.persist()
-    # same barrier rationale: cand feeds the pair join AND the url semi-join
-    # prune — two subtrees of one downstream query that AQE schedules
-    # concurrently, each otherwise recomputing the whole blocking subtree
-    cand.count()
+    cand = cand.localCheckpoint(eager=True)
     scored = pair_features(sig, cand)
     near_edges = verified_edges(scored, cfg)
     exact_edges = exact_star_edges(sig, cfg)
     # Materialize edges once: the CC loop and any downstream consumer would
-    # otherwise re-run extraction + blocking + scoring per action.
+    # otherwise re-run blocking + scoring per action. No dropDuplicates:
+    # blocking emits no pair of pages sharing full_hash, so the near edges
+    # and the exact channel's star edges are disjoint.
     edges = (
         near_edges.select("url_a", "url_b", "score", "channel")
         .unionByName(exact_edges)
-        .dropDuplicates(["url_a", "url_b"])
-        .persist()
+        .localCheckpoint(eager=True)
     )
-    edges.count()
 
     labels = connected_components(edges.select("url_a", "url_b"), cfg)
     clusters = resolve_clusters(labels)
@@ -375,9 +374,8 @@ def run_pipeline_checkpointed(
         near = verified_edges(pair_features(sig, cand), cfg).select(
             "url_a", "url_b", "score", "channel"
         )
-        return near.unionByName(exact_star_edges(sig, cfg)).dropDuplicates(
-            ["url_a", "url_b"]
-        )
+        # disjoint: blocking emits no pair of pages sharing full_hash
+        return near.unionByName(exact_star_edges(sig, cfg))
 
     def _clusters_from(edges: DataFrame) -> DataFrame:
         return resolve_clusters(

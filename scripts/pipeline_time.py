@@ -58,10 +58,10 @@ def main() -> None:
 
     # warm-up run (JIT/codegen/Arrow init/python-worker fleet), then timed
     # runs; report the best (steady-state throughput, the quantity that
-    # scales with cores). clearCache() between runs: run_pipeline persists
-    # its stage outputs, and an identical re-run would otherwise resolve its
-    # plans against the previous run's InMemoryRelation and skip the work
-    # being measured.
+    # scales with cores). run_pipeline pins its stage outputs with eager
+    # localCheckpoints, which each run recomputes; the previous run's pins
+    # are released once its result is dropped (clearCache() does not free
+    # them). clearCache() still drops any frame the caller cached.
     force(run_pipeline(pages, cfg).clusters)
     all_runs: list[float] = []
     for _ in range(runs):
