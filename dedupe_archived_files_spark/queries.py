@@ -15,6 +15,7 @@ from __future__ import annotations
 import pandas as pd  # noqa: F401  (pandas_udf annotation resolution)
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dedupe_archived_files_spark.config import PipelineConfig
 from dedupe_archived_files_spark.functions.minhash import (
@@ -28,6 +29,12 @@ from dedupe_archived_files_spark.functions.simhash import (
     simhash_udf,
 )
 from dedupe_archived_files_spark.operators.clustering import connected_components
+
+# Broadcast gate: a slim per-row side table (group, membership, feature or
+# unit-id table; at most ~2 KB a row) is hinted into a broadcast join while it
+# holds at most this many rows (~500 MB shipped to every executor); past it
+# the planner's shuffled join takes over. A row count stands in for bytes.
+BROADCAST_MAX_ROWS = 250_000
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -264,8 +271,8 @@ def minhash_lsh_near_dup(spark, sf_dir):
         # groups: one exchange over slim keys; rep = min(doc_id) is
         # deterministic. Broadcast both the group table (membership attach)
         # and the rep-id list (LSH-side semi-join) while they fit — past
-        # ~250k groups the planner's shuffled joins on the slim keys take
-        # over (same scale gate as the verify attach below).
+        # BROADCAST_MAX_ROWS groups the planner's shuffled joins on the slim
+        # keys take over (same scale gate as the verify attach below).
         # Each of g / m / d_lsh feeds several downstream subtrees (feats a+b,
         # ma/mb, intra self-join both sides, band build) — eager-checkpoint
         # all three so the group agg and the membership join run once, not
@@ -276,7 +283,7 @@ def minhash_lsh_near_dup(spark, sf_dir):
             .agg(F.min("doc_id").alias("rep"), F.count("*").alias("cnt"))
             .localCheckpoint(eager=True)
         )
-        g_b = F.broadcast(g) if stats["n_groups"] <= 250_000 else g
+        g_b = F.broadcast(g) if stats["n_groups"] <= BROADCAST_MAX_ROWS else g
         # membership (doc_id -> rep): docs with NULL n_toks (NULL text) drop
         # out of the equi-join — harmless, they can never pair (no band rows)
         m = (
@@ -347,12 +354,12 @@ def minhash_lsh_near_dup(spark, sf_dir):
     # planner would otherwise shuffle the CANDIDATE side — tens of millions
     # of rows at sf1.0 — by doc_id twice; the feature side is n_lsh × ~2 KB
     # and ships once to every executor instead). Scale-adaptive: beyond
-    # ~250k rows (~500 MB) the hint is dropped and the planner's shuffled
+    # BROADCAST_MAX_ROWS rows the hint is dropped and the planner's shuffled
     # join takes over.
     feats = d_lsh.select(
         "doc_id", F.col("n_toks").alias("nt"), F.col("tok_hashes").alias("th")
     )
-    if n_lsh <= 250_000:
+    if n_lsh <= BROADCAST_MAX_ROWS:
         feats = F.broadcast(feats)
     verified = (
         cand.join(
@@ -397,7 +404,7 @@ def minhash_lsh_near_dup(spark, sf_dir):
         rep_pairs = verified.select("doc_id_a", "doc_id_b", "jac")
         ma = m.select(F.col("rep").alias("doc_id_a"), F.col("doc_id").alias("da"))
         mb = m.select(F.col("rep").alias("doc_id_b"), F.col("doc_id").alias("db"))
-        if stats["n_docs"] <= 250_000:
+        if stats["n_docs"] <= BROADCAST_MAX_ROWS:
             ma, mb = F.broadcast(ma), F.broadcast(mb)
         cross = (
             rep_pairs.join(ma, "doc_id_a")
@@ -412,7 +419,7 @@ def minhash_lsh_near_dup(spark, sf_dir):
             "rep", "doc_id"
         )
         p, q = dup_m.alias("p"), dup_m.alias("q")
-        if stats["n_docs"] <= 250_000:
+        if stats["n_docs"] <= BROADCAST_MAX_ROWS:
             q = F.broadcast(q)  # keeps the clique self-join off a sort-merge
         intra = p.join(
             q,
@@ -978,7 +985,6 @@ def doc_fingerprints(spark, sf_dir):
     (spurious rows the oracle's WHERE length>=8 excludes). Docs shorter than
     FP_K chars yield no fingerprint row, matching the oracle exactly."""
     import numpy as np
-    from pyspark.sql import types as T
 
     k, w = FP_K, FP_W
 
@@ -1150,9 +1156,7 @@ def embedding_topk_cosine(spark, sf_dir):
     survives as the DuckDB oracle SQL."""
     import numpy as np
 
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    e = _vectors(_t(spark, sf_dir, "embeddings"))
     qrows = sorted(
         e.filter(F.col("vec_id") < N_QUERIES).collect(), key=lambda r: r["vec_id"]
     )
@@ -1230,7 +1234,6 @@ def embedding_ann_lsh(
     (VERDICT r2 #2), not an interpreted fold. Rows-only driver check (the
     hyperplane constants are engine-internal)."""
     import numpy as np
-    from pyspark.sql import types as T
 
     if n_queries is None:
         n_queries = N_QUERIES
@@ -1239,10 +1242,7 @@ def embedding_ann_lsh(
     r_bits = max(ANN_MIN_BITS, int(np.ceil(np.log2(max(2, n / 64)))))
     rng = np.random.RandomState(7)
     planes = rng.randn(n_tables * r_bits, 64).astype("float64")
-
-    e = raw.select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    e = _vectors(raw)
 
     keys_type = T.StructType(
         [
@@ -1308,31 +1308,7 @@ def embedding_ann_lsh(
         .select(F.col("x.vec_id").alias("query_id"), F.col("y.vec_id").alias("neighbor_id"))
         .distinct()
     )
-
-    @F.pandas_udf("double")
-    def pair_cos(qv: pd.Series, nv: pd.Series, qn: pd.Series, nn: pd.Series) -> pd.Series:
-        # batched exact rerank: one fused multiply-sum over the Arrow batch
-        A = np.vstack([np.asarray(v, dtype=np.float64) for v in qv])
-        B = np.vstack([np.asarray(v, dtype=np.float64) for v in nv])
-        num = np.einsum("ij,ij->i", A, B)
-        return pd.Series(num / (qn.to_numpy() * nn.to_numpy()))
-
-    fx = b.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn"))
-    fy = b.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv"), F.col("nrm").alias("nn"))
-    sims = cand.join(fx, "query_id").join(fy, "neighbor_id").withColumn(
-        "sim", pair_cos(F.col("qv"), F.col("nv"), F.col("qn"), F.col("nn"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        sims.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rk").cast("long").alias("rk"),
-            F.round("sim", 4).alias("sim"),
-        )
-    )
+    return _topk(_pair_sims(cand, b, "query_id", "neighbor_id"))
 
 
 IVF_MAX_CENTROIDS = 4096   # hard cap: driver collect + per-batch matmul bound
@@ -1366,6 +1342,125 @@ def _spherical_kmeans(X, k: int, sweeps: int = IVF_LLOYD_SWEEPS):
         nonempty = nrm[:, 0] > 1e-12
         C[nonempty] = sums[nonempty] / nrm[nonempty]
     return C
+
+
+# ---- embedding block→verify kernel -----------------------------------------
+# Every embedding channel is "block on a cheap key, then verify the exact
+# cosine": load vectors, train cells, assign each vector its best cells, join
+# on the key, verify pairs, keep the top k. These helpers are the one copy of
+# each step that the ANN paths and semantic dedup share.
+
+
+def _vectors(raw: DataFrame, *keep: str) -> DataFrame:
+    """(vec_id, *keep, v) with v the embedding as doubles. A NULL vector has
+    no cosine to anything, so it is dropped here and never pairs or ranks."""
+    return raw.where(F.col("embedding").isNotNull()).select(
+        "vec_id", *keep, F.transform("embedding", lambda x: x.cast("double")).alias("v")
+    )
+
+
+def _train_centroids(e: DataFrame, n: int, k: int):
+    """k spherical k-means centroids (driver-side numpy) over a bounded,
+    deterministic sample of e: the sample_n smallest ids, not `vec_id <
+    sample_n`, which is tiny or empty on sparse or offset id spaces (ADVICE
+    r5). On the dense 0-based driver tables both pick the same rows.
+    TakeOrderedAndProject keeps the collect bounded to sample_n rows."""
+    import numpy as np
+
+    sample_n = min(n, max(8 * k, 2048), IVF_TRAIN_SAMPLE)
+    srows = sorted(
+        e.orderBy("vec_id").limit(sample_n).collect(), key=lambda r: r["vec_id"]
+    )
+    X = np.vstack([np.asarray(r["v"], dtype=np.float64) for r in srows])
+    return _spherical_kmeans(X, k)
+
+
+def _assign(e: DataFrame, C, m: int) -> DataFrame:
+    """Pinned (vec_id, v, cells, nrm): `cells` holds each vector's m nearest
+    centroids of C by cosine, nearest first (one matmul per Arrow batch);
+    `nrm` is its norm, read again by the verify. Eager: every caller reads
+    it at least twice, and a lazy pin can double-compute under AQE's
+    concurrent subquery submission."""
+    import numpy as np
+
+    m = min(m, C.shape[0])
+
+    @F.pandas_udf(
+        T.StructType(
+            [
+                T.StructField("cells", T.ArrayType(T.LongType())),
+                T.StructField("nrm", T.DoubleType()),
+            ]
+        )
+    )
+    def assign_udf(vs: pd.Series) -> pd.DataFrame:
+        V = np.vstack([np.asarray(v, dtype=np.float64) for v in vs])
+        nrm = np.sqrt((V * V).sum(axis=1))
+        sims = (V / np.maximum(nrm, 1e-12)[:, None]) @ C.T  # (batch, k)
+        # top-m via argpartition (O(k)/row), then order just those m — a
+        # full argsort over k≈4096 columns costs ~10x at 10^6-row corpora
+        if sims.shape[1] > m:
+            part = np.argpartition(-sims, m - 1, axis=1)[:, :m]
+            rows = np.arange(len(part))[:, None]
+            top = part[rows, np.argsort(-sims[rows, part], axis=1)]
+        else:
+            top = np.argsort(-sims, axis=1)
+        return pd.DataFrame({"cells": list(top.astype(np.int64)), "nrm": nrm})
+
+    return (
+        e.withColumn("_a", assign_udf("v"))
+        .select("vec_id", "v", F.col("_a.cells").alias("cells"), F.col("_a.nrm").alias("nrm"))
+        .localCheckpoint(eager=True)
+    )
+
+
+@F.pandas_udf(T.DoubleType())
+def _pair_cos(av: pd.Series, bv: pd.Series, an: pd.Series, bn: pd.Series) -> pd.Series:
+    # batched exact cosine: one fused multiply-sum over the Arrow batch
+    import numpy as np
+
+    A = np.vstack([np.asarray(v, dtype=np.float64) for v in av])
+    B = np.vstack([np.asarray(v, dtype=np.float64) for v in bv])
+    num = np.einsum("ij,ij->i", A, B)
+    return pd.Series(num / (an.to_numpy() * bn.to_numpy()))
+
+
+# asNondeterministic (guide §4.4): a filter on the UDF-derived `sim` column
+# otherwise duplicates the ArrowEvalPython node, and the verify runs twice
+# per candidate pair
+_pair_cos = _pair_cos.asNondeterministic()
+
+
+def _pair_sims(cand: DataFrame, b: DataFrame, a_id: str, b_id: str) -> DataFrame:
+    """(a_id, b_id, sim): the exact cosine of each candidate pair. Candidate
+    generation and its pair-distinct carry ids only; the vectors and norms
+    are attached afterwards from b, a (vec_id, v, nrm) table. A pair whose
+    cosine is undefined (a zero-norm vector: 0/0 reaches Spark as NULL) is
+    dropped, as the brute-force baseline drops it."""
+    fa = b.select(F.col("vec_id").alias(a_id), F.col("v").alias("av"), F.col("nrm").alias("an"))
+    fb = b.select(F.col("vec_id").alias(b_id), F.col("v").alias("bv"), F.col("nrm").alias("bn"))
+    return (
+        cand.join(fa, a_id)
+        .join(fb, b_id)
+        .withColumn("sim", _pair_cos("av", "bv", "an", "bn"))
+        .filter(F.col("sim").isNotNull())
+        .select(a_id, b_id, "sim")
+    )
+
+
+def _topk(sims: DataFrame) -> DataFrame:
+    """The TOP_K neighbors per query under (sim desc, neighbor_id asc)."""
+    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
+    return (
+        sims.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= TOP_K)
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.col("rk").cast("long").alias("rk"),
+            F.round("sim", 4).alias("sim"),
+        )
+    )
 
 
 def ivf_n_centroids(n: int, n_probe: int = IVF_N_PROBE) -> int:
@@ -1427,7 +1522,6 @@ def embedding_ann_ivf(
     Rows-only driver check (centroids are
     engine-internal); recall vs the brute-force baseline is asserted (and
     printed) in pytest alongside the LSH variant, and reported per bench run."""
-    import numpy as np
 
     if n_queries is None:
         n_queries = N_QUERIES
@@ -1446,94 +1540,21 @@ def embedding_ann_ivf(
                 f"budget-attainable range) or embedding_ann_lsh (log-n "
                 f"candidate volume) at this scale"
             )
-    n_probe = min(n_probe, n_centroids)
-
-    e = raw.select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    sample_n = min(n, max(8 * n_centroids, 2048), IVF_TRAIN_SAMPLE)
-    # Deterministic sample WITHOUT the id-density assumption (ADVICE r5:
-    # `vec_id < sample_n` yields a tiny/empty sample on sparse or offset id
-    # spaces): take the sample_n smallest ids — identical row set on the
-    # dense 0-based driver tables (bit-identical centroids/output), a
-    # well-defined non-empty sample everywhere else. TakeOrderedAndProject
-    # keeps the collect bounded to sample_n rows.
-    srows = sorted(
-        e.orderBy("vec_id").limit(sample_n).collect(), key=lambda r: r["vec_id"]
-    )
-    X = np.vstack([np.asarray(r["v"], dtype=np.float64) for r in srows])
-    C = _spherical_kmeans(X, n_centroids)
-    probe = n_probe
-
-    from pyspark.sql import types as T
-
-    assign_type = T.StructType(
-        [
-            T.StructField("cell", T.LongType()),
-            T.StructField("probe_cells", T.ArrayType(T.LongType())),
-            T.StructField("nrm", T.DoubleType()),
-        ]
-    )
-
-    @F.pandas_udf(assign_type)
-    def assign_udf(vs: pd.Series) -> pd.DataFrame:
-        V = np.vstack([np.asarray(v, dtype=np.float64) for v in vs])
-        nrm = np.sqrt((V * V).sum(axis=1))
-        sims = (V / np.maximum(nrm, 1e-12)[:, None]) @ C.T  # (batch, k)
-        order = np.argsort(-sims, axis=1)
-        return pd.DataFrame(
-            {
-                "cell": order[:, 0].astype(np.int64),
-                "probe_cells": list(order[:, :probe].astype(np.int64)),
-                "nrm": nrm,
-            }
-        )
-
-    b = (
-        e.withColumn("_a", assign_udf("v"))
-        .select(
-            "vec_id",
-            "v",
-            F.col("_a.cell").alias("cell"),
-            F.col("_a.probe_cells").alias("probe_cells"),
-            F.col("_a.nrm").alias("nrm"),
-        )
-        .localCheckpoint(eager=True)  # consumed by probe join AND rerank
-    )
-    members = b.select(F.col("vec_id").alias("neighbor_id"), "cell")
+    e = _vectors(raw)
+    # each vector's n_probe nearest cells: the first is its inverted list,
+    # a query probes all of them
+    b = _assign(e, _train_centroids(e, n, n_centroids), n_probe)
+    members = b.select(F.col("vec_id").alias("neighbor_id"), F.col("cells")[0].alias("cell"))
     probes = (
         b.filter(F.col("vec_id") < n_queries) if n_queries > 0 else b
-    ).select(F.col("vec_id").alias("query_id"), F.explode("probe_cells").alias("cell"))
+    ).select(F.col("vec_id").alias("query_id"), F.explode("cells").alias("cell"))
     cand = (
         probes.join(members, "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .distinct()
     )
-
-    @F.pandas_udf("double")
-    def pair_cos(qv: pd.Series, nv: pd.Series, qn: pd.Series, nn: pd.Series) -> pd.Series:
-        A = np.vstack([np.asarray(v, dtype=np.float64) for v in qv])
-        B = np.vstack([np.asarray(v, dtype=np.float64) for v in nv])
-        num = np.einsum("ij,ij->i", A, B)
-        return pd.Series(num / (qn.to_numpy() * nn.to_numpy()))
-
-    fx = b.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn"))
-    fy = b.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv"), F.col("nrm").alias("nn"))
-    sims = cand.join(fx, "query_id").join(fy, "neighbor_id").withColumn(
-        "sim", pair_cos(F.col("qv"), F.col("nv"), F.col("qn"), F.col("nn"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        sims.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rk").cast("long").alias("rk"),
-            F.round("sim", 4).alias("sim"),
-        )
-    )
+    return _topk(_pair_sims(cand, b, "query_id", "neighbor_id"))
 
 
 IVF2_MAX_SUB = 256        # per-coarse-cell sub-centroid cap (level-2 fan-out)
@@ -1639,67 +1660,12 @@ def embedding_ann_ivf2(
     n = n_hint if n_hint is not None else raw.count()
     if k1 is None or k2 is None:
         k1, k2 = ivf2_params(n, n_probe1, n_probe2)
-    n_probe1 = min(n_probe1, k1)
 
-    e = raw.select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    # ---- level 1: coarse quantizer (same bounded driver train as embedding_ann_ivf)
-    sample_n = min(n, max(8 * k1, 2048), IVF_TRAIN_SAMPLE)
-    # Deterministic sample WITHOUT the id-density assumption (ADVICE r5:
-    # `vec_id < sample_n` yields a tiny/empty sample on sparse or offset id
-    # spaces): take the sample_n smallest ids — identical row set on the
-    # dense 0-based driver tables (bit-identical centroids/output), a
-    # well-defined non-empty sample everywhere else. TakeOrderedAndProject
-    # keeps the collect bounded to sample_n rows.
-    srows = sorted(
-        e.orderBy("vec_id").limit(sample_n).collect(), key=lambda r: r["vec_id"]
-    )
-    X = np.vstack([np.asarray(r["v"], dtype=np.float64) for r in srows])
-    C1 = _spherical_kmeans(X, k1)
-    probe1 = n_probe1
-
-    from pyspark.sql import types as T
-
-    assign_type = T.StructType(
-        [
-            T.StructField("cell", T.LongType()),
-            T.StructField("probe_cells", T.ArrayType(T.LongType())),
-            T.StructField("nrm", T.DoubleType()),
-        ]
-    )
-
-    @F.pandas_udf(assign_type)
-    def coarse_udf(vs: pd.Series) -> pd.DataFrame:
-        V = np.vstack([np.asarray(v, dtype=np.float64) for v in vs])
-        nrm = np.sqrt((V * V).sum(axis=1))
-        sims = (V / np.maximum(nrm, 1e-12)[:, None]) @ C1.T
-        # top-probe1 via argpartition (O(k1)/row), then order just those p —
-        # a full argsort over k1≈4096 columns costs ~10x at 10^6-row corpora
-        if sims.shape[1] > probe1:
-            part = np.argpartition(-sims, probe1 - 1, axis=1)[:, :probe1]
-            rows = np.arange(len(part))[:, None]
-            order = part[rows, np.argsort(-sims[rows, part], axis=1)]
-        else:
-            order = np.argsort(-sims, axis=1)
-        return pd.DataFrame(
-            {
-                "cell": order[:, 0].astype(np.int64),
-                "probe_cells": list(order[:, :probe1].astype(np.int64)),
-                "nrm": nrm,
-            }
-        )
-
-    b = (
-        e.withColumn("_a", coarse_udf("v"))
-        .select(
-            "vec_id",
-            "v",
-            F.col("_a.cell").alias("cell"),
-            F.col("_a.probe_cells").alias("probe_cells"),
-            F.col("_a.nrm").alias("nrm"),
-        )
-        .localCheckpoint(eager=True)  # feeds train, assign, probe AND rerank
+    e = _vectors(raw)
+    # ---- level 1: coarse quantizer (same bounded driver train as embedding_ann_ivf);
+    # the pinned assign feeds level-2 train, assign, probe AND rerank
+    b = _assign(e, _train_centroids(e, n, k1), n_probe1).withColumn(
+        "cell", F.col("cells")[0]
     )
 
     # ---- level 2 train: deterministic hash-sample, per-cell spherical k-means
@@ -1764,7 +1730,7 @@ def embedding_ann_ivf2(
     # ---- query probes: n_probe1 coarse cells, then n_probe2 sub-cells each
     qside = b.filter(F.col("vec_id") < n_queries) if n_queries > 0 else b
     qprobes = qside.select(
-        F.col("vec_id").alias("query_id"), "v", F.explode("probe_cells").alias("cell")
+        F.col("vec_id").alias("query_id"), "v", F.explode("cells").alias("cell")
     )
     p2_ = n_probe2
 
@@ -1811,30 +1777,7 @@ def embedding_ann_ivf2(
         stats["k1"], stats["k2"] = k1, k2
         stats["candidates"] = cand.count()
         stats["cand_per_query"] = stats["candidates"] / max(1, n_queries)
-
-    @F.pandas_udf("double")
-    def pair_cos(qv: pd.Series, nv: pd.Series, qn: pd.Series, nn: pd.Series) -> pd.Series:
-        A = np.vstack([np.asarray(v, dtype=np.float64) for v in qv])
-        B = np.vstack([np.asarray(v, dtype=np.float64) for v in nv])
-        num = np.einsum("ij,ij->i", A, B)
-        return pd.Series(num / (qn.to_numpy() * nn.to_numpy()))
-
-    fx = b.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn"))
-    fy = b.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv"), F.col("nrm").alias("nn"))
-    sims = cand.join(fx, "query_id").join(fy, "neighbor_id").withColumn(
-        "sim", pair_cos(F.col("qv"), F.col("nv"), F.col("qn"), F.col("nn"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        sims.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rk").cast("long").alias("rk"),
-            F.round("sim", 4).alias("sim"),
-        )
-    )
+    return _topk(_pair_sims(cand, b, "query_id", "neighbor_id"))
 
 
 COSINE_TAU = 0.3
@@ -1862,13 +1805,7 @@ def embedding_cosine_near_dup(spark, sf_dir):
     verify channel here carries; blocks beyond it belong to the ANN path."""
     import numpy as np
 
-    e = _spread(
-        _t(spark, sf_dir, "embeddings").select(
-            "vec_id",
-            "label",
-            F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-        )
-    )
+    e = _spread(_vectors(_t(spark, sf_dir, "embeddings"), "label"))
     tau = COSINE_TAU
 
     def _label_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -2113,7 +2050,6 @@ def fingerprint_overlap_near_dup(spark, sf_dir):
     applies the identical cap, so outputs match exactly at any scale.
     """
     import numpy as np
-    from pyspark.sql import types as T
 
     k, w = FP_K, FP_W
 
@@ -2256,7 +2192,6 @@ def semantic_dedup_embeddings(
     IVF path established). Driver check is rows-only (centroids are
     engine-internal); recall vs the brute-force all-pairs truth is asserted
     in pytest and reported per bench run."""
-    import numpy as np
 
     if tau is None:
         tau = COSINE_TAU
@@ -2291,12 +2226,7 @@ def semantic_dedup_embeddings(
             f"sub-quantizer (embedding_ann_ivf2's _train_cell shape) to "
             f"restore bounded occupancy"
         )
-    e = _spread(
-        # a NULL vector has no cosine to anything: it never pairs
-        raw.where(F.col("embedding").isNotNull()).select(
-            "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-        )
-    )
+    e = _spread(_vectors(raw))
     if rep_mode:
         # Group identity on the exact double arrays the verify consumes:
         # (xxhash64, murmur3) — the same ~96-bit two-hash regime as the
@@ -2311,7 +2241,7 @@ def semantic_dedup_embeddings(
             .agg(F.min("vec_id").alias("rep"), F.count("*").alias("cnt"))
             .localCheckpoint(eager=True)
         )
-        g_b = F.broadcast(g) if n <= 250_000 else g
+        g_b = F.broadcast(g) if n <= BROADCAST_MAX_ROWS else g
         memb = (
             ek.select("vec_id", "kx", "km")
             .join(g_b, ["kx", "km"])
@@ -2323,56 +2253,11 @@ def semantic_dedup_embeddings(
         ).select("vec_id", "v")
     else:
         e_work = e
-    sample_n = min(n, max(8 * k, 2048), IVF_TRAIN_SAMPLE)
-    # Deterministic sample WITHOUT the id-density assumption (ADVICE r5:
-    # `vec_id < sample_n` yields a tiny/empty sample on sparse or offset id
-    # spaces): take the sample_n smallest ids — identical row set on the
-    # dense 0-based driver tables (bit-identical centroids/output), a
-    # well-defined non-empty sample everywhere else. TakeOrderedAndProject
-    # keeps the collect bounded to sample_n rows.
-    srows = sorted(
-        e.orderBy("vec_id").limit(sample_n).collect(), key=lambda r: r["vec_id"]
-    )
-    X = np.vstack([np.asarray(r["v"], dtype=np.float64) for r in srows])
-    C = _spherical_kmeans(X, k)
-    m = min(SEMDEDUP_ASSIGN, C.shape[0])
-
-    from pyspark.sql import types as T
-
-    assign_type = T.StructType(
-        [
-            T.StructField("cells", T.ArrayType(T.LongType())),
-            T.StructField("nrm", T.DoubleType()),
-        ]
-    )
-
-    @F.pandas_udf(assign_type)
-    def assign_udf(vs: pd.Series) -> pd.DataFrame:
-        V = np.vstack([np.asarray(v, dtype=np.float64) for v in vs])
-        nrm = np.sqrt((V * V).sum(axis=1))
-        sims = (V / np.maximum(nrm, 1e-12)[:, None]) @ C.T
-        order = np.argsort(-sims, axis=1)
-        return pd.DataFrame(
-            {"cells": list(order[:, :m].astype(np.int64)), "nrm": nrm}
-        )
-
     # Slim-pair shape (optimization r6, guide §2.3/§8): candidate generation
-    # and the pair-distinct shuffle carry ONLY (vec_id, cell) / id pairs —
-    # the 64-double vectors previously rode through the self-join AND the
-    # dropDuplicates exchange (~1 KB/row both ways). Vectors are attached
-    # AFTER distinct, from the one checkpointed assign pass, so the verify
-    # arithmetic (same einsum, same rounding) sees identical inputs and the
-    # output is bit-identical.
-    b = (
-        e_work.withColumn("_a", assign_udf("v"))
-        .select(
-            "vec_id",
-            "v",
-            F.col("_a.cells").alias("cells"),
-            F.col("_a.nrm").alias("nrm"),
-        )
-        .localCheckpoint(eager=True)  # feeds band explode AND both attaches
-    )
+    # and the pair-distinct shuffle carry ONLY (vec_id, cell) / id pairs, not
+    # the 64-double vectors (~1 KB/row through both exchanges); _pair_sims
+    # attaches them after distinct from the one pinned assign pass.
+    b = _assign(e_work, _train_centroids(e, n, k), SEMDEDUP_ASSIGN)
     bands = b.select("vec_id", F.explode("cells").alias("cell"))
     a, c = bands.alias("a"), bands.alias("b")
     cand = (
@@ -2385,31 +2270,10 @@ def semantic_dedup_embeddings(
         # a pair sharing BOTH multi-assigned cells arrives twice; verify once
         .distinct()
     )
-
-    @F.pandas_udf("double")
-    def pair_cos(av: pd.Series, bv: pd.Series, an: pd.Series, bn: pd.Series) -> pd.Series:
-        A = np.vstack([np.asarray(v, dtype=np.float64) for v in av])
-        B = np.vstack([np.asarray(v, dtype=np.float64) for v in bv])
-        num = np.einsum("ij,ij->i", A, B)
-        return pd.Series(num / (an.to_numpy() * bn.to_numpy()))
-
-    # asNondeterministic (guide §4.4): the tau filter on the UDF-derived
-    # `sim` column otherwise duplicates the ArrowEvalPython node (verify ran
-    # twice per candidate pair in the round-5 plan)
-    pair_cos = pair_cos.asNondeterministic()
-
-    fa = b.select(
-        F.col("vec_id").alias("vec_id_a"), F.col("v").alias("av"), F.col("nrm").alias("an")
-    )
-    fb = b.select(
-        F.col("vec_id").alias("vec_id_b"), F.col("v").alias("bv"), F.col("nrm").alias("bn")
-    )
     res = (
-        cand.join(fa, "vec_id_a")
-        .join(fb, "vec_id_b")
-        .withColumn("sim", F.round(pair_cos("av", "bv", "an", "bn"), 4))
+        _pair_sims(cand, b, "vec_id_a", "vec_id_b")
+        .withColumn("sim", F.round("sim", 4))
         .filter(F.col("sim") >= tau)
-        .select("vec_id_a", "vec_id_b", "sim")
     )
     if rep_mode:
         # Expansion to member pairs (lossless, output-proportional):
@@ -2423,7 +2287,7 @@ def semantic_dedup_embeddings(
         # fails the tau filter, so its clique emits nothing in either mode.
         ma = memb.select(F.col("rep").alias("vec_id_a"), F.col("vec_id").alias("xa"))
         mb = memb.select(F.col("rep").alias("vec_id_b"), F.col("vec_id").alias("xb"))
-        if n <= 250_000:
+        if n <= BROADCAST_MAX_ROWS:
             ma, mb = F.broadcast(ma), F.broadcast(mb)
         cross = (
             res.join(ma, "vec_id_a")
@@ -2437,7 +2301,7 @@ def semantic_dedup_embeddings(
         unit = b.filter((F.col("nrm") > 0) & (F.col("nrm") < float("inf"))).select(
             F.col("vec_id").alias("rep")
         )
-        if n <= 250_000:
+        if n <= BROADCAST_MAX_ROWS:
             unit = F.broadcast(unit)
         dup = (
             memb.filter(F.col("cnt") > 1)
@@ -2445,7 +2309,7 @@ def semantic_dedup_embeddings(
             .select("rep", "vec_id")
         )
         p, q = dup.alias("p"), dup.alias("q")
-        if n <= 250_000:
+        if n <= BROADCAST_MAX_ROWS:
             q = F.broadcast(q)  # keeps the clique self-join off a sort-merge
         intra = p.join(
             q,
